@@ -48,8 +48,7 @@ final class CrawlLoop(
   // micro-batch clone, so the helpers' lazy active-session registration
   // would target the clone while the round's DataFrames analyze against
   // this session's registry (StreamingCrawl twin)
-  graft.functions.UrlExpressions.register(spark)
-  graft.functions.TextExpressions.register(spark)
+  graft.functions.GraftExtensions.register(spark)
 
   /** Free a round intermediate. Cut points are `localCheckpoint(false)`
     * (see Round's scaladoc) — their storage hangs off the truncated
@@ -126,9 +125,8 @@ final class CrawlLoop(
     // plan-description rendering is eager per action (for the SQL
     // listener event, UI or not) and the round DAG's nested cached plans
     // render exponentially — cap it for the loop's duration too
-    // (engine Bloom filters are FastBloom — sized purely by CrawlConfig,
-    // independent of the runtime-bloom-filter confs that silently clamp
-    // the native aggregate; see SketchExpressions.bloomConfMax.)
+    // (no runtime-bloom-filter conf is touched: engine Bloom filters are
+    // FastBloom, sized purely by CrawlConfig.)
     val saved = Seq(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.maxPlanStringLength" -> "2048",

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.pipeline.HashFamily
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -13,8 +14,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * for tables t in [0, nTables):
   *
   *   bit j of sig_t = (Σ_i vec[i]·comp(t·1024 + j, i)) > 0
-  *   comp(p, i)     = xxhash64(p, i) / Long.MaxValue            (xx64)
-  *                  = h1(md5(p + ":" + i)) / 2^47 − 1           (Md5)
+  *   comp(p, i)     = family.planeComponent(p, i)
+  *                    (xx64: xxhash64(p, i) / Long.MaxValue;
+  *                     Md5: h1(md5(p + ":" + i)) / 2^47 − 1)
   *
   * as ONE loop per row. The composition runs nBits interpreted
   * zip_with+aggregate chains PER TABLE per row and recomputes every
@@ -34,7 +36,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * `Similarity.lshTopK` turns it into the (t, bucket) rows the bucket
   * join consumes; `cosineNearDups` indexes it per band).
   */
-case class HyperplaneSigs(child: Expression, nBits: Int, nTables: Int, useMd5: Boolean)
+case class HyperplaneSigs(child: Expression, nBits: Int, nTables: Int, family: HashFamily)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
@@ -55,18 +57,19 @@ case class HyperplaneSigs(child: Expression, nBits: Int, nTables: Int, useMd5: B
 
   override def eval(input: InternalRow): Any = {
     val v = child.eval(input)
-    HyperplaneOps.sigs(v.asInstanceOf[ArrayData], nBits, nTables, useMd5, isFloat)
+    HyperplaneOps.sigs(v.asInstanceOf[ArrayData], nBits, nTables, family, isFloat)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val childGen = child.genCode(ctx)
+    val f = Families.ref(ctx, family)
     val resultCode =
       code"""
         ${childGen.code}
         org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
           graft.functions.HyperplaneOps.sigs(
             ${childGen.isNull} ? null : ${childGen.value},
-            $nBits, $nTables, $useMd5, $isFloat);
+            $nBits, $nTables, $f, $isFloat);
       """
     ev.copy(code = resultCode, isNull = FalseLiteral)
   }
@@ -78,54 +81,37 @@ case class HyperplaneSigs(child: Expression, nBits: Int, nTables: Int, useMd5: B
 
 object HyperplaneOps {
 
-  /** (family, plane, dim) → component cache: pure constants (seeded
-    * hashes of the INDICES, no data involved), bounded by
+  /** (plane, dim) → component cache of one family: pure constants
+    * (seeded hashes of the INDICES, no data involved), bounded by
     * nTables·nBits·dims entries.
     */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Double]()
-  private val Md5Bit = 1L << 62
-
-  private val compute = new java.util.function.Function[java.lang.Long, java.lang.Double] {
-    override def apply(key: java.lang.Long): java.lang.Double = {
-      val useMd5 = (key.longValue() & Md5Bit) != 0
-      val plane = ((key.longValue() >> 24) & 0xffffffffL).toInt
-      val dim = (key.longValue() & 0xffffffL).toInt
-      if (useMd5) {
-        val s = plane.toString + ":" + dim.toString
-        val d = java.security.MessageDigest.getInstance("MD5")
-          .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        val h1 = ((d(0) & 0xffL) << 40) | ((d(1) & 0xffL) << 32) |
-          ((d(2) & 0xffL) << 24) | ((d(3) & 0xffL) << 16) |
-          ((d(4) & 0xffL) << 8) | (d(5) & 0xffL)
-        java.lang.Double.valueOf(h1.toDouble / 1.40737488355328e14 - 1.0)
-      } else {
-        // xxhash64(lit(plane), dim): two INT children fold as
-        // hashInt(plane, 42) then hashInt(dim, ·)
-        java.lang.Double.valueOf(
-          org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(dim,
-            org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(plane, 42L))
-            .toDouble / Long.MaxValue.toDouble)
-      }
-    }
+  private final class Components(family: HashFamily)
+      extends java.util.function.Function[java.lang.Long, java.lang.Double] {
+    private val cache =
+      new java.util.concurrent.ConcurrentHashMap[java.lang.Long, java.lang.Double]()
+    override def apply(key: java.lang.Long): java.lang.Double =
+      java.lang.Double.valueOf(family.planeComponent(
+        (key.longValue() >> 24).toInt, (key.longValue() & 0xffffffL).toInt))
+    def get(plane: Int, dim: Int): Double =
+      cache.computeIfAbsent(
+        java.lang.Long.valueOf((plane.toLong << 24) | dim.toLong), this).doubleValue()
   }
 
-  private def component(plane: Int, dim: Int, useMd5: Boolean): Double =
-    cache.computeIfAbsent(
-      java.lang.Long.valueOf(
-        (if (useMd5) Md5Bit else 0L) | (plane.toLong << 24) | dim.toLong),
-      compute).doubleValue()
+  private val byFamily =
+    new java.util.concurrent.ConcurrentHashMap[HashFamily, Components]()
 
   /** static codegen target; see [[HyperplaneSigs]]. Null vector or any
     * null element → all-zero signatures (the composition's
     * when-otherwise null swallow).
     */
-  def sigs(vec: ArrayData, nBits: Int, nTables: Int, useMd5: Boolean,
+  def sigs(vec: ArrayData, nBits: Int, nTables: Int, family: HashFamily,
       isFloat: Boolean): ArrayData = {
     val out = new Array[Long](nTables)
     if (vec == null) return new GenericArrayData(out)
     val n = vec.numElements()
     var i = 0
     while (i < n) { if (vec.isNullAt(i)) return new GenericArrayData(out); i += 1 }
+    val comps = byFamily.computeIfAbsent(family, new Components(_))
     val x = new Array[Double](n)
     i = 0
     while (i < n) {
@@ -141,7 +127,7 @@ object HyperplaneOps {
         var d = 0.0
         i = 0
         while (i < n) {
-          d += x(i) * component(plane, i, useMd5)
+          d += x(i) * comps.get(plane, i)
           i += 1
         }
         if (d > 0) sig |= 1L << j

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import graft.pipeline.HashFamily
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -56,9 +57,7 @@ case class FastTerms(child: Expression) extends UnaryExpression {
 
 object TextOps {
 
-  private def isWord(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
-      (b >= '0' && b <= '9') || b == '_'
+  import ShingleOps.isWord
 
   /** static codegen target; see [[FastTerms]]. */
   def fastTerms(s: UTF8String): ArrayData = {
@@ -232,13 +231,15 @@ object ShingleOps {
     new GenericArrayData(arr)
   }
 
-  /** non-ASCII fallback for [[fastTokens]]: Spark-semantics trim + lower,
-    * the defining regex split, empties dropped.
+  /** the non-ASCII fallback tokenization every word-token kernel shares:
+    * Spark-semantics trim + lower, the defining regex split, empties
+    * dropped.
     */
-  private def slowTokens(s: UTF8String): ArrayData = {
-    val toks = s.trim().toLowerCase.toString.split("\\W+", -1).filter(_.nonEmpty)
-    new GenericArrayData(toks.map(t => UTF8String.fromString(t): Any))
-  }
+  private[functions] def slowTokenStrings(s: UTF8String): Array[String] =
+    s.trim().toLowerCase.toString.split("\\W+", -1).filter(_.nonEmpty)
+
+  private def slowTokens(s: UTF8String): ArrayData =
+    new GenericArrayData(slowTokenStrings(s).map(t => UTF8String.fromString(t): Any))
 
   private def joinBytes(toks: scala.collection.mutable.ArrayBuffer[Array[Byte]],
       from: Int, until: Int): UTF8String = {
@@ -279,7 +280,7 @@ object ShingleOps {
     * regex split, then the same windowing on Strings.
     */
   private def slowShingles(s: UTF8String, k: Int): ArrayData = {
-    val toksS = s.trim().toLowerCase.toString.split("\\W+", -1).filter(_.nonEmpty)
+    val toksS = slowTokenStrings(s)
     val toks = new scala.collection.mutable.ArrayBuffer[Array[Byte]](toksS.length)
     toksS.foreach(t => toks += t.getBytes("UTF-8"))
     joinWindows(toks, k)
@@ -316,6 +317,59 @@ object ShingleOps {
       else j += 1
     }
     c
+  }
+
+  /** static codegen target; see [[WindowHashes]]. One hash per k-token
+    * window of an ALREADY-TOKENIZED array: the window's tokens joined
+    * with single spaces (null elements skipped, `array_join` semantics)
+    * and hashed at seed 0 under `family`. Callers gate on
+    * `size(tk) >= k`, so the output always has `size(tk) − k + 1`
+    * elements here (kept total anyway: an under-k array yields an empty
+    * result).
+    */
+  def windowHashes(tk: ArrayData, k: Int, family: HashFamily): ArrayData = {
+    val n = tk.numElements()
+    if (n < k) return new GenericArrayData(new Array[Long](0))
+    // materialize element bytes once
+    val elems = new Array[Array[Byte]](n)
+    var i = 0
+    while (i < n) {
+      val u = tk.getUTF8String(i)
+      elems(i) = if (u == null) null else u.getBytes
+      i += 1
+    }
+    val out = new Array[Long](n - k + 1)
+    var buf = new Array[Byte](64)
+    val p = new Array[Long](2)
+    var w = 0
+    while (w <= n - k) {
+      // join non-null elements of [w, w+k) with single spaces
+      var len = 0
+      var cnt = 0
+      var t = w
+      while (t < w + k) {
+        if (elems(t) != null) { len += elems(t).length; cnt += 1 }
+        t += 1
+      }
+      if (cnt > 1) len += cnt - 1
+      if (len > buf.length) buf = new Array[Byte](math.max(len, buf.length * 2))
+      var pos = 0
+      var first = true
+      t = w
+      while (t < w + k) {
+        if (elems(t) != null) {
+          if (!first) { buf(pos) = ' '; pos += 1 }
+          System.arraycopy(elems(t), 0, buf, pos, elems(t).length)
+          pos += elems(t).length
+          first = false
+        }
+        t += 1
+      }
+      family.prepare(buf, 0, pos, p)
+      out(w) = family.hash(p, 0)
+      w += 1
+    }
+    new GenericArrayData(out)
   }
 }
 
@@ -385,89 +439,100 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override def prettyName: String = "sorted_intersect_count"
 }
 
-/** Fused MinHash signature for the xxhash64 (production) family —
-  * value-identical to the Catalyst composition in
-  * `Dedup.minhashSignaturesComposed`:
+/** The four sketch kernels below take their [[HashFamily]] as a
+  * parameter: one kernel body per sketch, the family's byte-level hooks
+  * (`prepare` once per hashed value, then `hash`/`rank`/`bits`/
+  * `foldRanks`) supplying the only step that differs. Generated code
+  * receives the family as a reference object.
+  */
+private[functions] object Families {
+
+  def ref(ctx: CodegenContext, family: HashFamily): String =
+    ctx.addReferenceObj("family", family, classOf[HashFamily].getName)
+
+  /** the Md5 family's kernels keep their `md5_` names */
+  def name(family: HashFamily, base: String): String =
+    if (family == HashFamily.Md5) s"md5_$base" else base
+}
+
+/** Fused MinHash signature — value-identical to the Catalyst composition
+  * in `Dedup.minhashSignaturesComposed` under the same family:
   *
-  *   explode(fast_shingles(text, k)) → hp = xxhash64(shingle)
-  *   → numHashes mins of xxhash64(hp, j) grouped by doc
+  *   explode(fast_shingles(text, k)) → hp = family.prepare(shingle)
+  *   → numHashes mins of family.rankHashPrepared(hp, j) grouped by doc
   *   → array(min_0 .. min_{n-1})
   *
   * as ONE byte scan per document. Tokenize (same ASCII gate + regex
   * fallback as [[FastShingles]]), join each k-window into a reused
-  * scratch buffer (no per-window allocation), hash it with the same
-  * `XXH64`/seed-42 chain the composition's `xxhash64(sh)` →
-  * `xxhash64(hp, j)` pair computes — hp = XXH64(bytes, 42), then
-  * rank_j = hashInt(j, hashLong(hp, 42)) — and fold the running minima.
-  * The composition's first-occurrence-distinct shingle SET is skipped
-  * on purpose: a min over the multiset equals the min over the set, so
-  * duplicate windows can't change any signature slot (the equality
-  * property in FastShinglesSpec pins this). Like [[SimHash64]], the win
-  * is structural: the composition materializes one row per shingle and
-  * exchanges per-doc partial minima, while this is a per-row projection
-  * inside whole-stage codegen with zero exchanges.
+  * scratch buffer (no per-window allocation), digest it once with the
+  * family's `prepare` and fold all numHashes rank minima with
+  * `foldRanks` (xx64: hp = XXH64(bytes, 42), rank_j =
+  * hashInt(j, hashLong(hp, 42)) with the hashLong hoisted; Md5:
+  * rank_j = (h1 + j·h2) mod (2^31 − 1)). The composition's
+  * first-occurrence-distinct shingle SET is skipped on purpose: a min
+  * over the multiset equals the min over the set, so duplicate windows
+  * can't change any signature slot (FastShinglesSpec and Md5FusedSpec
+  * pin this). Like [[SimHash64]], the win is structural: the
+  * composition materializes one row per shingle and exchanges per-doc
+  * partial minima, while this is a per-row projection inside whole-stage
+  * codegen with zero exchanges.
   *
   * Below k tokens the single shingle is the whole token list joined
   * (including the empty string for an empty document), matching
   * `fast_shingles` — so every non-null document yields a signature, the
   * same row set as the composition's explode (never empty).
   */
-case class MinHashSigs(child: Expression, k: Int, numHashes: Int)
+case class MinHashSigs(child: Expression, k: Int, numHashes: Int, family: HashFamily)
     extends UnaryExpression {
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val max = family.seedBound.fold(1024)(math.min(1024, _))
     if (child.dataType != StringType)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
     else if (k < 1)
       TypeCheckResult.TypeCheckFailure(s"$prettyName requires k >= 1, got $k")
-    else if (numHashes < 1 || numHashes > 1024)
+    else if (numHashes < 1 || numHashes > max)
       TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires numHashes in [1, 1024], got $numHashes")
+        s"$prettyName requires numHashes in [1, $max]" +
+          family.seedBound.fold("")(_ => " (the 2^55 no-overflow seed bound)") +
+          s", got $numHashes")
     else TypeCheckResult.TypeCheckSuccess
+  }
 
   override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.minhashSigs(input.asInstanceOf[UTF8String], k, numHashes)
+    MinHashOps.minhashSigs(input.asInstanceOf[UTF8String], k, numHashes, family)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val f = Families.ref(ctx, family)
     defineCodeGen(ctx, ev,
-      c => s"graft.functions.MinHashOps.minhashSigs($c, $k, $numHashes)")
+      c => s"graft.functions.MinHashOps.minhashSigs($c, $k, $numHashes, $f)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-  override def prettyName: String = "minhash_sigs"
+  override def prettyName: String = Families.name(family, "minhash_sigs")
 }
 
 object MinHashOps {
 
-  private val Seed = 42L
-
-  /** the composition's per-(shingle-hash, seed) rank chain — see
-    * [[MinHashSigs]] scaladoc.
-    */
-  private def foldMins(mins: Array[Long], hp: Long): Unit = {
-    val base = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(hp, Seed)
-    var j = 0
-    while (j < mins.length) {
-      val v = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(j, base)
-      if (v < mins(j)) mins(j) = v
-      j += 1
-    }
-  }
-
   /** static codegen target; see [[MinHashSigs]]. */
-  def minhashSigs(s: UTF8String, k: Int, n: Int): ArrayData = {
+  def minhashSigs(s: UTF8String, k: Int, n: Int, family: HashFamily): ArrayData = {
     val bytes = s.getBytes
+    val mins = Array.fill(n)(Long.MaxValue)
+    val p = new Array[Long](2)
     var i = 0
-    while (i < bytes.length) { if (bytes(i) < 0) return slowSigs(s, k, n); i += 1 }
+    while (i < bytes.length) {
+      if (bytes(i) < 0) return slowSigs(s, k, mins, p, family)
+      i += 1
+    }
 
     val toks = ShingleOps.tokenizeAscii(bytes)
-    val mins = Array.fill(n)(Long.MaxValue)
     var buf = new Array[Byte](64)
 
-    // join toks[from, until) with single spaces into buf, hash, fold
+    // join toks[from, until) with single spaces into buf, digest, fold
     def window(from: Int, until: Int): Unit = {
       var len = 0
       var t = from
@@ -482,8 +547,8 @@ object MinHashOps {
         pos += toks(t).length
         t += 1
       }
-      foldMins(mins, org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, Seed))
+      family.prepare(buf, 0, len, p)
+      family.foldRanks(p, mins)
     }
 
     if (toks.length < k) window(0, toks.length)
@@ -514,10 +579,12 @@ object MinHashOps {
   }
 
   /** static codegen target; see [[LshBandHashes]]. */
-  def lshBandHashes(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
+  def lshBandHashes(sig: ArrayData, bands: Int, rowsPerBand: Int,
+      family: HashFamily): ArrayData = {
     // worst case per slot: '-' + 19 digits + ',' = 21 bytes
     val buf = new Array[Byte](rowsPerBand * 21)
     val out = new Array[Long](bands)
+    val p = new Array[Long](2)
     val len = sig.numElements()
     var b = 0
     while (b < bands) {
@@ -529,55 +596,56 @@ object MinHashOps {
         pos = longToAscii(buf, pos, sig.getLong(i))
         i += 1
       }
-      val hp = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, pos, Seed)
-      out(b) = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(
-        b, org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(hp, Seed))
+      family.prepare(buf, 0, pos, p)
+      out(b) = family.hash(p, b)
       b += 1
     }
     new GenericArrayData(out)
   }
 
   /** non-ASCII fallback: [[ShingleOps]]' slow tokenization semantics,
-    * each window joined as a String and hashed exactly as `xxhash64`
-    * hashes a string.
+    * each window joined as a String and digested over its UTF-8 bytes —
+    * exactly what the family's Column-level `prepare` hashes.
     */
-  private def slowSigs(s: UTF8String, k: Int, n: Int): ArrayData = {
-    val toks = s.trim().toLowerCase.toString.split("\\W+", -1).filter(_.nonEmpty)
-    val mins = Array.fill(n)(Long.MaxValue)
-    def window(sh: String): Unit =
-      foldMins(mins, org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-        UTF8String.fromString(sh), Seed))
+  private def slowSigs(s: UTF8String, k: Int, mins: Array[Long], p: Array[Long],
+      family: HashFamily): ArrayData = {
+    val toks = ShingleOps.slowTokenStrings(s)
+    def window(sh: String): Unit = {
+      val b = sh.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      family.prepare(b, 0, b.length, p)
+      family.foldRanks(p, mins)
+    }
     if (toks.length < k) window(toks.mkString(" "))
     else (0 to toks.length - k).foreach(w => window(toks.slice(w, w + k).mkString(" ")))
     new GenericArrayData(mins)
   }
 }
 
-/** Fused winnowing fingerprint for the xxhash64 (production) family —
-  * value-identical to the Catalyst composition in
-  * `TextAnalysis.winnowingFingerprintComposed` (Schleimer et al.,
-  * SIGMOD'03):
+/** Fused winnowing fingerprint — value-identical to the Catalyst
+  * composition in `TextAnalysis.winnowingFingerprintComposed` under the
+  * same family (Schleimer et al., SIGMOD'03):
   *
   *   toks   = filter(split(trim(text), "\\s+"), t => t != "")
-  *   hashes = transform(toks, t => xxhash64(xxhash64(t), 0))
+  *   hashes = transform(toks, t => family.rankHash(t, 0))
   *   mins   = window minima of `hashes`, window w (≥1 window; all-of-doc
   *            when the doc is shorter than w; empty when no tokens)
   *   fingerprint = array_sort(array_distinct(mins))
-  *   fp_hash     = xxhash64(xxhash64(array_join(decimal(fingerprint), ",")), 1)
+  *   fp_hash     = family.hash(array_join(decimal(fingerprint), ","), 1)
   *
   * as ONE scan per document returning `struct<fingerprint:array<bigint>,
   * fp_hash:bigint>`. The composition is all interpreted higher-order
   * functions — per window it slices and array_min's, O(n·w) interpreted
   * calls — while the kernel tokenizes byte-level (ASCII whitespace can
   * never occur inside a multi-byte UTF-8 sequence, so NO fallback is
-  * needed and token bytes are passed through case-preserved, exactly
+  * needed and token bytes are digested in place, case-preserved, exactly
   * like the `\s+` split), folds a monotonic-deque sliding minimum in
   * O(n), then sorts + dedups the minima in place and hashes the joined
-  * decimal bytes from a scratch buffer. FastShinglesSpec pins fused ≡
-  * composed; the ta04 DuckDB oracle rides the Md5 composition unchanged.
+  * decimal bytes from a scratch buffer. FastShinglesSpec (xx64) and
+  * Md5FusedSpec (Md5) pin fused ≡ composed; the ta04 DuckDB oracle pins
+  * the Md5 values cross-engine.
   */
-case class WinnowFp(child: Expression, window: Int) extends UnaryExpression {
+case class WinnowFp(child: Expression, window: Int, family: HashFamily)
+    extends UnaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("fingerprint",
       ArrayType(org.apache.spark.sql.types.LongType, containsNull = false),
@@ -594,31 +662,29 @@ case class WinnowFp(child: Expression, window: Int) extends UnaryExpression {
     else TypeCheckResult.TypeCheckSuccess
 
   override protected def nullSafeEval(input: Any): Any =
-    WinnowOps.winnowFp(input.asInstanceOf[UTF8String], window)
+    WinnowOps.winnowFp(input.asInstanceOf[UTF8String], window, family)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WinnowOps.winnowFp($c, $window)")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val f = Families.ref(ctx, family)
+    defineCodeGen(ctx, ev, c => s"graft.functions.WinnowOps.winnowFp($c, $window, $f)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-  override def prettyName: String = "winnow_fp"
+  override def prettyName: String = Families.name(family, "winnow_fp")
 }
 
 object WinnowOps {
 
-  private val Seed = 42L
-
   private def isWs(b: Byte): Boolean = // Java regex \s = [ \t\n\x0B\f\r]
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
 
-  private def rank(h: Long): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(0,
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(h, Seed))
-
   /** static codegen target; see [[WinnowFp]]. */
-  def winnowFp(s: UTF8String, w: Int): org.apache.spark.sql.catalyst.InternalRow = {
+  def winnowFp(s: UTF8String, w: Int,
+      family: HashFamily): org.apache.spark.sql.catalyst.InternalRow = {
     val bytes = s.getBytes
     val n = bytes.length
+    val p = new Array[Long](2)
 
     // token rank hashes: maximal non-whitespace byte runs, case and
     // bytes preserved (no fallback needed — see class doc)
@@ -631,10 +697,8 @@ object WinnowOps {
       while (i < n && !isWs(bytes(i))) i += 1
       if (i > start) {
         if (nTok == hashes.length) hashes = java.util.Arrays.copyOf(hashes, nTok * 2)
-        hashes(nTok) = rank(
-          org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-            bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + start,
-            i - start, Seed))
+        family.prepare(bytes, start, i - start, p)
+        hashes(nTok) = family.rank(p, 0)
         nTok += 1
       }
     }
@@ -667,7 +731,7 @@ object WinnowOps {
     }
     val fp = java.util.Arrays.copyOf(mins, fpLen)
 
-    // fp_hash over the comma-joined decimal bytes (same chain, seed 1)
+    // fp_hash over the comma-joined decimal bytes (equality hash, seed 1)
     val buf = new Array[Byte](fpLen * 21)
     var pos = 0
     i = 0
@@ -676,34 +740,31 @@ object WinnowOps {
       pos = MinHashOps.longToAscii(buf, pos, fp(i))
       i += 1
     }
-    val hp = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, pos, Seed)
-    val fpHash = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(1,
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(hp, Seed))
+    family.prepare(buf, 0, pos, p)
 
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](new GenericArrayData(fp), fpHash))
+      Array[Any](new GenericArrayData(fp), family.hash(p, 1)))
   }
 }
 
-/** Fused LSH band hashes for the xxhash64 (production) family —
-  * value-identical to the per-band Catalyst composition in
-  * `Dedup.lshBandsComposed`:
+/** Fused LSH band hashes — value-identical to the per-band Catalyst
+  * composition in `Dedup.lshBandsComposed` under the same family:
   *
   *   transform(sequence(0, bands-1), b =>
-  *     xxhash64(xxhash64(array_join(
-  *       transform(slice(sig, b*r+1, r), x => cast(x as string)), ",")), b))
+  *     family.hash(array_join(
+  *       transform(slice(sig, b*r+1, r), x => cast(x as string)), ","), b))
   *
   * as ONE pass over the signature array. The composition's cost is pure
   * interpretation: per band it runs four nested interpreted higher-order
   * functions, casts each slot to a decimal string and joins them — all
   * to feed a hash. The kernel writes the same comma-joined decimal bytes
   * into a reused scratch buffer (manual long→ASCII, no String/byte[]
-  * allocations) and hashes with the same chain (`hp = XXH64(bytes, 42)`;
-  * `band_hash = hashInt(b, hashLong(hp, 42))`), so BAND-HASH VALUES ARE
-  * UNCHANGED — committed `dd_bands`/`dd_bands_bh` layouts, the streaming
-  * ingest and the bucket-pruned reads all stay bit-compatible, and
-  * FastShinglesSpec pins fused ≡ composed. Slice semantics replicated
+  * allocations), digests them once per band and takes the family's
+  * equality hash at seed b (xx64: `hashInt(b, hashLong(XXH64(bytes, 42),
+  * 42))`; Md5: h1 + b·h2), so BAND-HASH VALUES ARE UNCHANGED — committed
+  * `dd_bands`/`dd_bands_bh` layouts, the streaming ingest and the
+  * bucket-pruned reads all stay bit-compatible, and FastShinglesSpec /
+  * Md5FusedSpec pin fused ≡ composed. Slice semantics replicated
   * exactly, including ragged tails (a band window past the array end
   * shortens; a fully-past window joins an empty slice = hash of "").
   *
@@ -712,55 +773,61 @@ object WinnowOps {
   * the explode survives (it IS the banding), only the per-band
   * interpretation goes native.
   */
-case class LshBandHashes(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
+case class LshBandHashes(child: Expression, bands: Int, rowsPerBand: Int,
+    family: HashFamily) extends UnaryExpression {
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(org.apache.spark.sql.types.LongType, _)
-        if bands >= 1 && rowsPerBand >= 1 => TypeCheckResult.TypeCheckSuccess
+        if bands >= 1 && family.seedBound.forall(bands <= _) && rowsPerBand >= 1 =>
+      TypeCheckResult.TypeCheckSuccess
     case ArrayType(org.apache.spark.sql.types.LongType, _) =>
+      val bandRule = family.seedBound.fold("bands >= 1")(m =>
+        s"1 <= bands <= $m (the 2^55 no-overflow seed bound)")
       TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires bands >= 1 and rowsPerBand >= 1, got ($bands, $rowsPerBand)")
+        s"$prettyName requires $bandRule and rowsPerBand >= 1, got ($bands, $rowsPerBand)")
     case t => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires ARRAY<BIGINT> input, got ${t.catalogString}")
   }
 
   override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.lshBandHashes(input.asInstanceOf[ArrayData], bands, rowsPerBand)
+    MinHashOps.lshBandHashes(input.asInstanceOf[ArrayData], bands, rowsPerBand, family)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val f = Families.ref(ctx, family)
     defineCodeGen(ctx, ev,
-      c => s"graft.functions.MinHashOps.lshBandHashes($c, $bands, $rowsPerBand)")
+      c => s"graft.functions.MinHashOps.lshBandHashes($c, $bands, $rowsPerBand, $f)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-  override def prettyName: String = "lsh_band_hashes"
+  override def prettyName: String = Families.name(family, "lsh_band_hashes")
 }
 
-/** Fused 64-bit SimHash for the xxhash64 (production) family — value-
-  * identical to the Catalyst composition in `Dedup.simhashComposed`:
+/** Fused 64-bit SimHash — value-identical to the Catalyst composition in
+  * `Dedup.simhashComposed` under the same family:
   *
-  *   explode(fast_tokens(text)) → h = xxhash64(t)
-  *   → 64 sums of (bit j of h == 1 ? +1 : -1) grouped by doc
+  *   explode(fast_tokens(text)) → h = family.bitSource(t)
+  *   → 64 sums of (family.bitAt(h, j) == 1 ? +1 : -1) grouped by doc
   *   → bit j of the signature = (sum_j > 0)
   *
   * as ONE byte scan per document: tokenize maximal ASCII word-char runs
   * (same gate + non-ASCII regex fallback as [[FastTokens]] — the token
-  * multiset is identical by FastShinglesSpec), hash each token's
-  * lowercased bytes into a reused scratch buffer with the same
-  * `XXH64.hashUTF8String`/seed-42 function `xxhash64` uses, accumulate
-  * the 64 vote counters, pack the sign bits. The composition's cost is
+  * multiset is identical by FastShinglesSpec), digest each token's
+  * lowercased bytes from a reused scratch buffer with the family's
+  * `prepare`, accumulate the 64 vote counters from its `bits` (xx64:
+  * `XXH64(bytes, 42)`, what `xxhash64` computes; Md5: h1's 48 bits then
+  * h2's low 16), pack the sign bits. The composition's cost is
   * structural, not arithmetic: explode materializes one row per token
   * and the 64-sum aggregate shuffles per-doc partials, while this is a
   * per-row projection inside whole-stage codegen with zero exchanges.
   *
   * Returns NULL when the document has no tokens — the composition's
-  * explode drops such documents, so callers filter `isNotNull` to keep
-  * the row set identical (pinned by FastShinglesSpec).
+  * explode drops such documents, so callers filter to keep the row set
+  * identical (pinned by FastShinglesSpec and Md5FusedSpec).
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression, family: HashFamily) extends UnaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
@@ -770,35 +837,28 @@ case class SimHash64(child: Expression) extends UnaryExpression {
       s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
 
   override protected def nullSafeEval(input: Any): Any =
-    SimHashOps.simhash64(input.asInstanceOf[UTF8String])
+    SimHashOps.simhash64(input.asInstanceOf[UTF8String], family)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val f = Families.ref(ctx, family)
     nullSafeCodeGen(ctx, ev, c => {
       val boxed = ctx.freshName("simhash")
       s"""
-         |java.lang.Long $boxed = graft.functions.SimHashOps.simhash64($c);
+         |java.lang.Long $boxed = graft.functions.SimHashOps.simhash64($c, $f);
          |if ($boxed == null) { ${ev.isNull} = true; }
          |else { ${ev.value} = $boxed.longValue(); }
        """.stripMargin
     })
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-  override def prettyName: String = "simhash64"
+  override def prettyName: String = Families.name(family, "simhash64")
 }
 
 object SimHashOps {
 
-  private def isWord(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
-      (b >= '0' && b <= '9') || b == '_'
-
-  /** `xxhash64(col)`'s default seed (Spark's `functions.xxhash64` builds
-    * `XxHash64(_, 42)`); the composition hashes each token with it.
-    */
-  private val Seed = 42L
-
-  private[functions] def vote(votes: Array[Int], h: Long): Unit = {
+  private def vote(votes: Array[Int], h: Long): Unit = {
     var j = 0
     while (j < 64) {
       votes(j) += ((((h >>> j) & 1L).toInt) << 1) - 1
@@ -806,7 +866,7 @@ object SimHashOps {
     }
   }
 
-  private[functions] def pack(votes: Array[Int]): java.lang.Long = {
+  private def pack(votes: Array[Int]): java.lang.Long = {
     var acc = 0L
     var j = 0
     while (j < 64) {
@@ -817,20 +877,21 @@ object SimHashOps {
   }
 
   /** static codegen target; see [[SimHash64]]. Null = no tokens. */
-  def simhash64(s: UTF8String): java.lang.Long = {
+  def simhash64(s: UTF8String, family: HashFamily): java.lang.Long = {
     val bytes = s.getBytes
     var i = 0
-    while (i < bytes.length) { if (bytes(i) < 0) return slowSimhash(s); i += 1 }
+    while (i < bytes.length) { if (bytes(i) < 0) return slowSimhash(s, family); i += 1 }
 
     val votes = new Array[Int](64)
+    val p = new Array[Long](2)
     var buf = new Array[Byte](32)
     var any = false
     val n = bytes.length
     i = 0
     while (i < n) {
-      while (i < n && !isWord(bytes(i))) i += 1
+      while (i < n && !ShingleOps.isWord(bytes(i))) i += 1
       val start = i
-      while (i < n && isWord(bytes(i))) i += 1
+      while (i < n && ShingleOps.isWord(bytes(i))) i += 1
       if (i > start) {
         any = true
         val len = i - start
@@ -841,46 +902,74 @@ object SimHashOps {
           buf(j) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
           j += 1
         }
-        vote(votes, org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-          buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, Seed))
+        family.prepare(buf, 0, len, p)
+        vote(votes, family.bits(p))
       }
     }
     if (!any) null else pack(votes)
   }
 
   /** non-ASCII fallback: [[ShingleOps]]' slow tokenization semantics
-    * (Spark trim + lower + the defining regex split), each token hashed
-    * exactly as `xxhash64` hashes a string.
+    * (Spark trim + lower + the defining regex split), each token
+    * digested over its UTF-8 bytes.
     */
-  private def slowSimhash(s: UTF8String): java.lang.Long = {
-    val toks = s.trim().toLowerCase.toString.split("\\W+", -1).filter(_.nonEmpty)
+  private def slowSimhash(s: UTF8String, family: HashFamily): java.lang.Long = {
+    val toks = ShingleOps.slowTokenStrings(s)
     if (toks.isEmpty) return null
     val votes = new Array[Int](64)
+    val p = new Array[Long](2)
     toks.foreach { t =>
-      vote(votes, org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-        UTF8String.fromString(t), Seed))
+      val b = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      family.prepare(b, 0, b.length, p)
+      vote(votes, family.bits(p))
     }
     pack(votes)
   }
 }
 
+/** Fused k-token window hashes over a token ARRAY (the dd12 / pipe11
+  * span-dedup key stage) — value-identical to the composition in
+  * `Dedup.windowHashesComposed`:
+  *
+  *   transform(sequence(0, size(tk) - k),
+  *     i => family.hash(array_join(slice(tk, i + 1, k), " "), 0))
+  *
+  * as one pass: each window's tokens joined into a reused scratch
+  * buffer and hashed at seed 0 under the family (Md5: h1; xx64: the
+  * exact `xxhash64(xxhash64(str), 0)` chain). The composition runs three
+  * nested interpreted higher-order functions and a fresh joined string
+  * PER WINDOW (≈ per token); `posexplode` of this array yields the
+  * same `(wpos, wh)` rows the count/semi-join stages consume.
+  */
+case class WindowHashes(child: Expression, k: Int, family: HashFamily)
+    extends UnaryExpression {
+  override def dataType: DataType =
+    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) if k >= 1 => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, _) =>
+      TypeCheckResult.TypeCheckFailure(s"$prettyName requires k >= 1, got $k")
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires ARRAY<STRING> input, got ${t.catalogString}")
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    ShingleOps.windowHashes(input.asInstanceOf[ArrayData], k, family)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val f = Families.ref(ctx, family)
+    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleOps.windowHashes($c, $k, $f)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+  override def prettyName: String = "window_hashes"
+}
+
 object TextExpressions {
-
-  @volatile private var registeredIn: SparkSession = _
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("fast_terms",
-      exprs => FastTerms(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("fast_tokens",
-      exprs => FastTokens(exprs.head), "built-in")
-    registeredIn = spark
+  def fast_terms(col: Column): Column = {
+    GraftExtensions.ensure()
+    call_function("fast_terms", col)
   }
-
-  private def ensure(): Unit = {
-    val s = SparkSession.active
-    if (registeredIn ne s) register(s)
-  }
-
-  def fast_terms(col: Column): Column = { ensure(); call_function("fast_terms", col) }
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.url.Urls
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * U1 upgrade path): unlike Scala UDFs these stay inside whole-stage
   * codegen — `doGenCode` emits a direct static call, no
   * serialization/Option boxing per row, null handling handled by the
-  * generated null-check. Registered for SQL via [[UrlExpressions.register]].
+  * generated null-check. Registered for SQL via [[GraftExtensions]].
   *
   * The static targets are UTF8String→UTF8String (see [[UrlOps]]): the
   * common shapes are computed by a byte-level scan with NO String (or any
@@ -449,34 +449,14 @@ object UrlOps {
 
 object UrlExpressions {
 
-  @volatile private var registeredIn: SparkSession = _
-
-  /** Register in the session's FunctionRegistry (available to both the
-    * Column API via `call_function` and to `spark.sql`). Idempotent.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("canonicalize_url",
-      exprs => CanonicalizeUrl(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("url_fingerprint",
-      exprs => UrlFingerprint(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("url_host",
-      exprs => UrlHost(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("url_path",
-      exprs => UrlPath(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("fnv1a64",
-      exprs => Fnv1a64(exprs.head), "built-in")
-    registeredIn = spark
+  private def call(name: String, col: Column): Column = {
+    GraftExtensions.ensure()
+    call_function(name, col)
   }
 
-  private def ensure(): Unit = {
-    val s = SparkSession.active
-    if (registeredIn ne s) register(s)
-  }
-
-  def canonicalize_url(col: Column): Column = { ensure(); call_function("canonicalize_url", col) }
-  def url_fingerprint(col: Column): Column = { ensure(); call_function("url_fingerprint", col) }
-  def url_host(col: Column): Column = { ensure(); call_function("url_host", col) }
-  def url_path(col: Column): Column = { ensure(); call_function("url_path", col) }
-  def fnv1a64(col: Column): Column = { ensure(); call_function("fnv1a64", col) }
+  def canonicalize_url(col: Column): Column = call("canonicalize_url", col)
+  def url_fingerprint(col: Column): Column = call("url_fingerprint", col)
+  def url_host(col: Column): Column = call("url_host", col)
+  def url_path(col: Column): Column = call("url_path", col)
+  def fnv1a64(col: Column): Column = call("fnv1a64", col)
 }

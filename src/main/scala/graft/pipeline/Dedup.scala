@@ -87,40 +87,30 @@ object Dedup {
     * when an external oracle must recompute the signatures
     * value-for-value.
     *
-    * The production xx64 family runs the fused
-    * [[graft.functions.MinHashSigs]] expression — the whole signature
-    * is one codegen'd byte scan per document, zero shingle-explode rows
+    * Every family runs the fused [[graft.functions.MinHashSigs]]
+    * expression, parameterized by the family — the whole signature is
+    * one codegen'd byte scan per document, zero shingle-explode rows
     * and zero aggregate exchanges (null-text docs drop exactly like the
-    * composition's explode drops them). Other families take
-    * [[minhashSignaturesComposed]], which is also the executable spec
-    * FastShinglesSpec pins the fused path against.
+    * composition's explode drops them).
+    * [[minhashSignaturesComposed]] is the executable spec
+    * FastShinglesSpec and Md5FusedSpec pin the fused path against.
     */
   def minhashSignatures(
       docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 64,
       family: HashFamily = HashFamily.XxHash64): DataFrame = {
-    // Md5's no-overflow invariant caps usable seeds (HashFamily.MaxSeed)
-    // — fail loudly at plan-build time (PipelineSpec pins the contract)
-    require(family != HashFamily.Md5 || numHashes <= HashFamily.Md5.MaxSeed + 1,
-      s"Md5 family supports at most ${HashFamily.Md5.MaxSeed + 1} permutations")
-    // BOTH families run a fused one-byte-scan kernel (round 7 extends the
-    // round-6 xx64 fusion to the Md5 oracle parameterization — the
-    // composed explode + 64-min-aggregate structure plus the
-    // md5→hex→conv leaf chain was the dominant dd03-Md5 cost). The
-    // expression is null iff its input is — every non-null doc has ≥1
+    // fail loudly at plan-build time (PipelineSpec pins the contract)
+    family.requireSeeds(numHashes, "permutations")
+    // One fused byte-scan kernel for every family (the composed explode
+    // + 64-min-aggregate structure plus Md5's md5→hex→conv leaf chain
+    // was the dominant dd03-Md5 cost). The expression is null iff its input is — every non-null doc has ≥1
     // shingle (below k tokens the whole joined list, possibly "") — so
     // the null gate is the INPUT filter, which pushes down to the scan
     // (isnotnull over the expression would evaluate the kernel twice:
     // once in Filter, once in Project).
-    val kernel: org.apache.spark.sql.catalyst.expressions.Expression =
-      family match {
-        case HashFamily.XxHash64 => graft.functions.MinHashSigs(
-          org.apache.spark.sql.graft.ColumnShim.expression(col(textCol)),
-          shingleK, numHashes)
-        case HashFamily.Md5 => graft.functions.Md5MinHashSigs(
-          org.apache.spark.sql.graft.ColumnShim.expression(col(textCol)),
-          shingleK, numHashes)
-      }
+    val kernel = graft.functions.MinHashSigs(
+      org.apache.spark.sql.graft.ColumnShim.expression(col(textCol)),
+      shingleK, numHashes, family)
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol),
         org.apache.spark.sql.graft.ColumnShim.column(kernel).as("minhash"))
@@ -133,9 +123,7 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numHashes: Int,
       family: HashFamily): DataFrame = {
-    // Md5's no-overflow invariant caps usable seeds (HashFamily.MaxSeed)
-    require(family != HashFamily.Md5 || numHashes <= HashFamily.Md5.MaxSeed + 1,
-      s"Md5 family supports at most ${HashFamily.Md5.MaxSeed + 1} permutations")
+    family.requireSeeds(numHashes, "permutations")
     // prepare() materializes the per-shingle shared hash state in ONE
     // projection, so a family whose seeds derive from a single digest
     // (Md5) pays it once per shingle, not once per (shingle, seed)
@@ -158,24 +146,17 @@ object Dedup {
       signatures: DataFrame, idCol: String,
       bands: Int, rowsPerBand: Int,
       family: HashFamily = HashFamily.XxHash64): DataFrame = {
-    // the band index is the seed; Md5's no-overflow bound caps it
-    // (fail loudly at plan-build time — PipelineSpec pins the contract)
-    require(family != HashFamily.Md5 || bands <= HashFamily.Md5.MaxSeed + 1,
-      s"Md5 family supports at most ${HashFamily.Md5.MaxSeed + 1} bands")
-    // fused per-band kernels for BOTH families (LshBandHashes /
-    // Md5LshBandHashes) — BAND-HASH VALUES UNCHANGED vs the composition
+    // the band index is the seed (fail loudly at plan-build time —
+    // PipelineSpec pins the contract)
+    family.requireSeeds(bands, "bands")
+    // one fused per-band kernel for every family (LshBandHashes) —
+    // BAND-HASH VALUES UNCHANGED vs the composition
     // (same comma-joined-decimal bytes, same hash chain per family), so
     // committed dd_bands layouts stay bit-compatible; the posexplode
     // survives because it IS the banding the bucket join consumes
-    val kernel: org.apache.spark.sql.catalyst.expressions.Expression =
-      family match {
-        case HashFamily.XxHash64 => graft.functions.LshBandHashes(
-          org.apache.spark.sql.graft.ColumnShim.expression(col("minhash")),
-          bands, rowsPerBand)
-        case HashFamily.Md5 => graft.functions.Md5LshBandHashes(
-          org.apache.spark.sql.graft.ColumnShim.expression(col("minhash")),
-          bands, rowsPerBand)
-      }
+    val kernel = graft.functions.LshBandHashes(
+      org.apache.spark.sql.graft.ColumnShim.expression(col("minhash")),
+      bands, rowsPerBand, family)
     signatures.select(
       col(idCol),
       posexplode(org.apache.spark.sql.graft.ColumnShim.column(kernel))
@@ -191,8 +172,7 @@ object Dedup {
       family: HashFamily): DataFrame = {
     // the band index is the seed, and it's lambda-bound (not a literal),
     // so Md5's plan-time literal check can't see it — bound it here
-    require(family != HashFamily.Md5 || bands <= HashFamily.Md5.MaxSeed + 1,
-      s"Md5 family supports at most ${HashFamily.Md5.MaxSeed + 1} bands")
+    family.requireSeeds(bands, "bands")
     signatures.select(
       col(idCol),
       posexplode(transform(
@@ -382,8 +362,7 @@ object Dedup {
       .select(col("did"), posexplode(
         org.apache.spark.sql.graft.ColumnShim.column(
           graft.functions.WindowHashes(
-            org.apache.spark.sql.graft.ColumnShim.expression(col("tk")),
-            k, family == HashFamily.Md5)))
+            org.apache.spark.sql.graft.ColumnShim.expression(col("tk")), k, family)))
         .as(Seq("wpos", "wh")))
 
   /** the defining composition (see [[windowHashes]]) — the executable
@@ -439,19 +418,18 @@ object Dedup {
     * [[HashFamily]] (xxhash64 default; Md5 for the DuckDB-twinned
     * CORRECTNESS dd04).
     *
-    * The production xx64 family runs the fused
-    * [[graft.functions.SimHash64]] expression — the whole signature is
+    * Every family runs the fused [[graft.functions.SimHash64]]
+    * expression, parameterized by the family — the whole signature is
     * one codegen'd byte scan per document, zero explode rows and zero
     * aggregate exchanges; documents with no tokens drop exactly like the
     * composition's explode drops them (the expression returns null).
-    * Other families take [[simhashComposed]], which is also the
-    * executable spec FastShinglesSpec pins the fused path against.
+    * [[simhashComposed]] is the executable spec FastShinglesSpec and
+    * Md5FusedSpec pin the fused path against.
     */
   def simhash(docs: DataFrame, idCol: String, textCol: String,
       family: HashFamily = HashFamily.XxHash64): DataFrame = {
-    // BOTH families run a fused one-byte-scan kernel (round 7 extends
-    // the round-6 xx64 fusion to the Md5 oracle parameterization). The
-    // no-token drop is an INPUT-ONLY predicate, not
+    // One fused byte-scan kernel for every family. The no-token drop is
+    // an INPUT-ONLY predicate, not
     // isnotnull(simhash64(text)): Catalyst pushes a result-null filter
     // below the projection and evaluates the kernel twice (once in
     // Filter, once in Project). A token exists iff the LOWERCASED text
@@ -462,13 +440,8 @@ object Dedup {
     // composition's explode-drop (FastShinglesSpec/Md5FusedSpec pin
     // it). rlike early-exits on the first word char; a null text
     // yields null → filtered, matching nullIntolerant.
-    val kernel: org.apache.spark.sql.catalyst.expressions.Expression =
-      family match {
-        case HashFamily.XxHash64 => graft.functions.SimHash64(
-          org.apache.spark.sql.graft.ColumnShim.expression(col(textCol)))
-        case HashFamily.Md5 => graft.functions.Md5SimHash64(
-          org.apache.spark.sql.graft.ColumnShim.expression(col(textCol)))
-      }
+    val kernel = graft.functions.SimHash64(
+      org.apache.spark.sql.graft.ColumnShim.expression(col(textCol)), family)
     docs.filter(lower(col(textCol)).rlike("\\w"))
       .select(col(idCol),
         org.apache.spark.sql.graft.ColumnShim.column(kernel).as("simhash"))

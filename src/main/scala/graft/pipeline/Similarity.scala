@@ -79,22 +79,6 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** Deterministic pseudo-random hyperplane component for (plane j,
-    * dim i): a seeded hash mapped to [-1, 1). No RNG state — pure
-    * function, identical on every executor. Family-injectable
-    * (HashFamily doc): xxhash64 default; Md5 maps its 48-bit h1 of
-    * `md5(j:i)` to [-1, 1) with exact double arithmetic a DuckDB twin
-    * reproduces bit-for-bit (CORRECTNESS dd06 / ann02).
-    */
-  private def planeComponent(j: Int, i: Column, family: HashFamily): Column =
-    family match {
-      case HashFamily.XxHash64 =>
-        xxhash64(lit(j), i).cast("double") / lit(Long.MaxValue.toDouble)
-      case HashFamily.Md5 =>
-        family.hash(concat(lit(j.toString), lit(":"), i.cast("string")), 0)
-          .cast("double") / lit(1.40737488355328e14) - lit(1.0)
-    }
-
   /** nBits-bit random-hyperplane signature (SimHash for vectors):
     * bit j = sign(v · r_j). Vectors in the same bucket are likely
     * cosine-close; probing only the bucket turns top-k from O(n) per
@@ -105,7 +89,7 @@ object Similarity {
     (0 until nBits).map { j =>
       val d = aggregate(
         zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * planeComponent(j, i, family)),
+          (x, i) => x.cast("double") * family.planeComponent(j, i)),
         lit(0.0), (acc, x) => acc + x)
       when(d > 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
     }.reduce[Column]((a, b) => a.bitwiseOR(b))
@@ -164,7 +148,7 @@ object Similarity {
     org.apache.spark.sql.graft.ColumnShim.column(
       graft.functions.HyperplaneSigs(
         org.apache.spark.sql.graft.ColumnShim.expression(vec),
-        nBits, nTables, family == HashFamily.Md5))
+        nBits, nTables, family))
 
   /** nBits-bit signature for band `band` — independent plane sets per
     * band (seed folded into the plane index). The defining composition
@@ -175,7 +159,7 @@ object Similarity {
     (0 until nBits).map { j =>
       val d = aggregate(
         zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * planeComponent(band * 1024 + j, i, family)),
+          (x, i) => x.cast("double") * family.planeComponent(band * 1024 + j, i)),
         lit(0.0), (acc, x) => acc + x)
       when(d > 0, shiftleft(lit(1L), j)).otherwise(lit(0L))
     }.reduce[Column]((a, b) => a.bitwiseOR(b))

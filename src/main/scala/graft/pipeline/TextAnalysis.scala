@@ -410,23 +410,17 @@ object TextAnalysis {
       docs: DataFrame, idCol: String, textCol: String,
       window: Int = 4,
       family: HashFamily = HashFamily.XxHash64): DataFrame = {
-    // BOTH families run a fused kernel (WinnowFp round 6; Md5WinnowFp
-    // round 7 — the ta04 oracle parameterization ran the O(n·window)
-    // interpreted composition until then): tokenize + rank-hash + O(n)
+    // One fused kernel for every family (WinnowFp, parameterized by the
+    // family; the O(n·window) interpreted composition is the spec):
+    // tokenize + rank-hash + O(n)
     // deque sliding minima + sort/dedup + fp digest in ONE scan. Both
     // struct fields come from one expression; whole-stage codegen's
     // subexpression elimination evaluates the kernel once per row.
     // Values pinned fused ≡ composed in FastShinglesSpec (xx64) and
     // Md5FusedSpec (Md5); the ta04 DuckDB oracle pins the Md5 values
     // cross-engine.
-    val kernel: org.apache.spark.sql.catalyst.expressions.Expression =
-      family match {
-        case HashFamily.XxHash64 => graft.functions.WinnowFp(
-          org.apache.spark.sql.graft.ColumnShim.expression(col(textCol)), window)
-        case HashFamily.Md5 => graft.functions.Md5WinnowFp(
-          org.apache.spark.sql.graft.ColumnShim.expression(col(textCol)), window)
-      }
-    val fused = org.apache.spark.sql.graft.ColumnShim.column(kernel)
+    val fused = org.apache.spark.sql.graft.ColumnShim.column(graft.functions.WinnowFp(
+      org.apache.spark.sql.graft.ColumnShim.expression(col(textCol)), window, family))
     docs.select(
       col(idCol),
       fused.getField("fingerprint").as("fingerprint"),

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkTestSession
+import graft.pipeline.HashFamily.XxHash64
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +16,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
   implicit val spark: SparkSession = SparkTestSession.spark
 
-  test("GraftExtensions injects all sixteen functions; SQL evaluates them under CODEGEN_ONLY") {
+  test("GraftExtensions injects all fourteen functions; SQL evaluates them under CODEGEN_ONLY") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
     org.apache.spark.sql.GraftExtTestBridge.register(
@@ -57,16 +58,17 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(r.getSeq[String](6) == Seq("the", "the", "cat", "c"))
     assert(r.getSeq[String](7) == Seq("one two", "two three"))
     assert(r.getLong(8) == SimHashOps.simhash64(
-      org.apache.spark.unsafe.types.UTF8String.fromString("one Two three")).longValue())
+      org.apache.spark.unsafe.types.UTF8String.fromString("one Two three"), XxHash64)
+      .longValue())
     assert(r.isNullAt(9)) // no tokens → null, mirroring the explode-drop
     assert(r.getSeq[Long](10) == MinHashOps.minhashSigs(
-      org.apache.spark.unsafe.types.UTF8String.fromString("one Two three"), 2, 4)
+      org.apache.spark.unsafe.types.UTF8String.fromString("one Two three"), 2, 4, XxHash64)
       .toLongArray().toSeq)
     assert(r.getSeq[Long](11) == MinHashOps.lshBandHashes(
       new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array[Any](1L, -2L, 3L, 4L)), 2, 2).toLongArray().toSeq)
+        Array[Any](1L, -2L, 3L, 4L)), 2, 2, XxHash64).toLongArray().toSeq)
     val wf = WinnowOps.winnowFp(
-      org.apache.spark.unsafe.types.UTF8String.fromString("one Two one Three"), 2)
+      org.apache.spark.unsafe.types.UTF8String.fromString("one Two one Three"), 2, XxHash64)
     val wfRow = r.getStruct(12)
     assert(wfRow.getSeq[Long](0) == wf.getArray(0).toLongArray().toSeq)
     assert(wfRow.getLong(1) == wf.getLong(1))
@@ -78,20 +80,27 @@ class ExtensionsSpec extends AnyFunSuite {
       spark.sql("SELECT fast_shingles('a b c', v) FROM (SELECT 2 AS v)").collect()
     }
     assert(err.getMessage.contains("literal INT"), err.getMessage)
+  }
 
-    // might_contain probes are BIGINT-only (string-built filters are
-    // probed via the sketch API driver/executor-side instead)
-    val bloomHit = spark.sql(
-      """WITH t AS (SELECT explode(sequence(1, 100)) AS v)
-        |SELECT graft_might_contain(
-        |  (SELECT graft_bloom_agg(xxhash64(v), 1000L, 8000L) FROM t),
-        |  xxhash64(7)) AS hit""".stripMargin).collect()(0).getBoolean(0)
-    assert(bloomHit)
-    val bloomMiss = spark.sql(
-      """WITH t AS (SELECT explode(sequence(1, 100)) AS v)
-        |SELECT graft_might_contain(
-        |  (SELECT graft_bloom_agg(xxhash64(v), 1000L, 8000L) FROM t),
-        |  xxhash64(-12345)) AS hit""".stripMargin).collect()(0).getBoolean(0)
-    assert(!bloomMiss)
+  test("the lazy registration path exposes exactly the extension's function names") {
+    def graftNames(reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry) =
+      reg.listFunction().map(_.funcName).toSet --
+        org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+          .listFunction().map(_.funcName)
+
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val extReg = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.clone()
+    org.apache.spark.sql.GraftExtTestBridge.register(ext, extReg)
+
+    // a Column-API helper registers lazily into the ACTIVE session
+    val fresh = spark.newSession()
+    assert(graftNames(fresh.sessionState.functionRegistry).isEmpty)
+    SparkSession.setActiveSession(fresh)
+    try UrlExpressions.url_host(org.apache.spark.sql.functions.lit("http://x.onion/"))
+    finally SparkSession.setActiveSession(spark)
+
+    assert(graftNames(fresh.sessionState.functionRegistry) == graftNames(extReg))
+    assert(graftNames(extReg).size == 14)
   }
 }

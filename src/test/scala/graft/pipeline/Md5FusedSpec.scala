@@ -5,20 +5,49 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The round-7 fused Md5-family kernels (Md5MinHashSigs /
-  * Md5LshBandHashes / Md5SimHash64) and the family-shared WindowHashes
-  * kernel must reproduce their Catalyst compositions EXACTLY — the
-  * compositions stay in Dedup as executable specs
+/** The fused sketch kernels under the Md5 family (MinHashSigs /
+  * LshBandHashes / SimHash64 / WinnowFp parameterized by
+  * `HashFamily.Md5`) and the family-shared WindowHashes kernel must
+  * reproduce their Catalyst compositions EXACTLY — the compositions stay
+  * in Dedup/TextAnalysis as executable specs
   * (`minhashSignaturesComposed`, `lshBandsComposed`, `simhashComposed`,
-  * `windowHashesComposed`), and the dd02/dd03/dd04/dd10/dd11/dd12/dd13
-  * DuckDB oracles pin the values cross-engine. Same adversarial
-  * alphabet as FastShinglesSpec (ASCII gate + non-ASCII fallback + case
-  * flips + empty/short docs).
+  * `windowHashesComposed`, `winnowingFingerprintComposed`), and the
+  * dd02/dd03/dd04/dd10/dd11/dd12/dd13/ta04 DuckDB oracles pin the values
+  * cross-engine. Same adversarial alphabet as FastShinglesSpec (ASCII
+  * gate + non-ASCII fallback + case flips + empty/short docs).
+  *
+  * Every test runs twice: as configured, then again with codegen
+  * fallback off (`spark.sql.codegen.factoryMode=CODEGEN_ONLY` and
+  * `spark.sql.codegen.fallback=false`) and `ConvertToLocalRelation`
+  * excluded (it would fold projections over the local test inputs at
+  * plan time, interpreted), so a broken `doGenCode` (e.g. the
+  * family's generated-code reference) fails instead of silently falling
+  * back to interpreted eval.
   */
 class Md5FusedSpec extends AnyFunSuite {
 
   implicit val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
+
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    super.withFixture(test) match {
+      case org.scalatest.Succeeded =>
+        val confs = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+          "spark.sql.codegen.fallback" -> "false",
+          "spark.sql.optimizer.excludedRules" ->
+            org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation.ruleName)
+        val prev = confs.map { case (k, v) =>
+          val p = spark.conf.getOption(k)
+          spark.conf.set(k, v)
+          k -> p
+        }
+        try super.withFixture(test)
+        finally prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None)    => spark.conf.unset(k)
+        }
+      case other => other
+    }
 
   private def adversarial(seed: Int): Seq[String] = {
     val rnd = new scala.util.Random(seed)
@@ -118,5 +147,35 @@ class Md5FusedSpec extends AnyFunSuite {
     val wantSim = Dedup.simhashComposed(df, "doc_id", "text", HashFamily.Md5)
       .as[(Long, Long)].collect().toMap
     assert(gotSim == wantSim)
+  }
+
+  test("kernel argument checks keep each family's bounds") {
+    import graft.functions.{LshBandHashes, MinHashSigs, WinnowFp}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val text = Literal("a b c")
+    val sig = Literal.create(Seq(1L, 2L), ArrayType(LongType, containsNull = false))
+    def ok(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
+      e.checkInputDataTypes().isSuccess
+    val (xx, m) = (HashFamily.XxHash64, HashFamily.Md5)
+    // minhash: Md5 at most 64 hashes (the 2^55 seed bound), xx64 at most 1024
+    assert(ok(MinHashSigs(text, 3, 64, m)) && !ok(MinHashSigs(text, 3, 65, m)))
+    assert(ok(MinHashSigs(text, 3, 1024, xx)) && !ok(MinHashSigs(text, 3, 1025, xx)))
+    for (f <- Seq(xx, m)) {
+      assert(!ok(MinHashSigs(text, 3, 0, f)) && !ok(MinHashSigs(text, 0, 8, f)))
+    }
+    // bands: Md5 at most 64, xx64 unbounded
+    assert(ok(LshBandHashes(sig, 64, 1, m)) && !ok(LshBandHashes(sig, 65, 1, m)))
+    assert(ok(LshBandHashes(sig, 100000, 1, xx)))
+    for (f <- Seq(xx, m)) {
+      assert(!ok(LshBandHashes(sig, 0, 1, f)) && !ok(LshBandHashes(sig, 4, 0, f)))
+      assert(!ok(LshBandHashes(text, 4, 1, f)))
+    }
+    // winnow: window >= 1 for both
+    for (f <- Seq(xx, m)) {
+      assert(ok(WinnowFp(text, 1, f)) && !ok(WinnowFp(text, 0, f)))
+    }
+    assert(MinHashSigs(text, 3, 65, m).checkInputDataTypes().toString
+      .contains("md5_minhash_sigs requires numHashes in [1, 64] (the 2^55 no-overflow seed bound)"))
   }
 }
